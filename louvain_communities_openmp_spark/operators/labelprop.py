@@ -18,6 +18,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .bcast_rounds import broadcast_round, probe_vertex_ids, vertex_frame
 from .transforms import vertices
 
 
@@ -50,7 +51,6 @@ def _labelprop_local(
     probe already IS the edge set, so no extra pass is paid).
     """
     import numpy as np
-    import pandas as pd
 
     tbl = edges.select("src", "dst", "w").limit(bound + 1).toArrow()
     if tbl.num_rows > bound or tbl.num_rows == 0:
@@ -84,10 +84,8 @@ def _labelprop_local(
         np.ascontiguousarray(w[order]), lab, max_iter,
     )
     if it_c is not None:
-        out = pd.DataFrame({"id": ids, "label": ids[lab]})
         return LabelPropResult(
-            edges.sparkSession.createDataFrame(out, "id long, label long"),
-            it_c,
+            vertex_frame(edges.sparkSession, ids, "label", ids[lab]), it_c
         )
     it = 0
     while it < max_iter:
@@ -123,55 +121,81 @@ def _labelprop_local(
         if bool(np.array_equal(new, lab)):
             break
         lab = new
-    out = pd.DataFrame({"id": ids, "label": ids[lab]})
-    spark = edges.sparkSession
     return LabelPropResult(
-        spark.createDataFrame(out, "id long, label long"), it
+        vertex_frame(edges.sparkSession, ids, "label", ids[lab]), it
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    max_iter: int = 10,
-    broadcast_vertices: int = 5_000_000,
-    debug_plans: list | None = None,
-    small_graph_edges: int = 4_000_000,
+def _scored_best(j: DataFrame) -> DataFrame:
+    """A round's two-level aggregate over edges ⋈ neighbor labels:
+    Σw per (src, nl), then the argmax with (max wt, min label)
+    tie-break — max_by on a struct ordered by (wt, -nl), deterministic
+    (reference-style first-max made order-free, SURVEY §7.3 /
+    louvain.hxx:454-464 analog)."""
+    scored = j.groupBy("src", "nl").agg(F.sum("w").alias("wt"))
+    return scored.groupBy(F.col("src").alias("id")).agg(
+        F.max_by(
+            "nl", F.struct(F.col("wt"), (-F.col("nl")).alias("neg"))
+        ).alias("new_label")
+    )
+
+
+def _labelprop_broadcast(
+    edges: DataFrame, ids, max_iter: int, debug_plans: list | None
 ) -> LabelPropResult:
-    # Two regimes, same answer (gate mirrors Louvain's broadcast_vertices):
-    #
-    # - V ≤ broadcast_vertices: partition the static edge table on the
-    #   AGGREGATION key (src) and BROADCAST the vertex-sized labels
-    #   frame into the dst join. The round is then exchange-FREE: the
-    #   broadcast join preserves e's src partitioning, which satisfies
-    #   both groupBy(src, nl) and groupBy(src) downstream — without the
-    #   broadcast, the post-join groupBy(src, nl) re-shuffles the
-    #   edge-sized scored table every round (map-side combine can't
-    #   collapse it while neighbor labels are still diverse).
-    # - V > broadcast_vertices (the 100 TB regime): labels can't ship
-    #   to every executor; partition e on the JOIN key (dst) so the
-    #   per-round exchange is the vertex-sized labels frame plus the
-    #   map-side-combined scored aggregate.
-    #
-    # Before either: the measured-optimal serial finish under the same
-    # edge bound as louvain.py (debug_plans forces the distributed
-    # rounds — that hook exists to pin their plan shape).
-    if debug_plans is None and small_graph_edges > 0:
-        local = _labelprop_local(edges, small_graph_edges, max_iter)
-        if local is not None:
-            return local
-    verts = vertices(edges)
-    use_bc = verts.count() <= broadcast_vertices
+    """Driver-coordinated rounds (V ≤ broadcast_vertices): labels live
+    on the driver as a numpy array over the sorted vertex ids. The
+    static edge table is partitioned on the AGGREGATION key (src) and
+    the vertex-sized labels are BROADCAST into the dst join; the
+    broadcast join preserves e's src partitioning, which satisfies
+    both groupBy(src, nl) and groupBy(src), so the round is ONE edge
+    job with no shuffle Exchange (without the broadcast, the post-join
+    groupBy(src, nl) re-shuffles the edge-sized scored table every
+    round). Merge and changed test are numpy; label states round by
+    round equal the DataFrame rounds' exactly."""
+    import numpy as np
+
     e = (
         edges.select("src", "dst", "w")
         .where(F.col("src") != F.col("dst"))
-        .repartition("src" if use_bc else "dst")
+        .repartition("src")
         .persist()
     )
-    # eager localCheckpoint per round: truncates lineage AND avoids the
-    # unpersist-cascade (unpersisting a parent invalidates caches built
-    # on it, which silently re-runs the whole chain on later rounds)
+    lab = ids.copy()
+    it = 0
+    while it < max_iter:
+        best = broadcast_round(
+            e, {"dst": ids, "nl": lab}, "dst long, nl long", "dst",
+            _scored_best, debug_plans,
+        )
+        new = lab.copy()
+        new[np.searchsorted(ids, best.column("id").to_numpy())] = (
+            best.column("new_label").to_numpy()
+        )
+        it += 1
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    e.unpersist()
+    return LabelPropResult(vertex_frame(edges.sparkSession, ids, "label", lab), it)
+
+
+def _labelprop_rounds(edges: DataFrame, max_iter: int) -> LabelPropResult:
+    """DataFrame rounds (V > broadcast_vertices, the 100 TB regime):
+    labels can't ship to every executor; e is partitioned on the JOIN
+    key (dst) so the per-round exchange is the vertex-sized labels
+    frame plus the map-side-combined scored aggregate. An eager
+    localCheckpoint per round truncates lineage AND avoids the
+    unpersist-cascade (unpersisting a parent invalidates caches built
+    on it, which silently re-runs the whole chain on later rounds)."""
+    e = (
+        edges.select("src", "dst", "w")
+        .where(F.col("src") != F.col("dst"))
+        .repartition("dst")
+        .persist()
+    )
     labels = (
-        verts
+        vertices(edges)
         .select("id", F.col("id").alias("label"))
         .localCheckpoint(eager=True)
     )
@@ -180,25 +204,7 @@ def label_propagation(
         nbr = labels.select(
             F.col("id").alias("dst"), F.col("label").alias("nl")
         )
-        scored = (
-            e.join(F.broadcast(nbr) if use_bc else nbr, "dst")
-            .groupBy("src", "nl")
-            .agg(F.sum("w").alias("wt"))
-        )
-        # argmax with (max wt, min label) tie-break: max_by on a struct
-        # ordered by (wt, -nl) — deterministic (reference-style first-max
-        # made order-free, SURVEY §7.3 / louvain.hxx:454-464 analog)
-        best = scored.groupBy(F.col("src").alias("id")).agg(
-            F.max_by("nl", F.struct(F.col("wt"), (-F.col("nl")).alias("neg"))).alias("new_label")
-        )
-        if debug_plans is not None:
-            # test hook: execute the round body standalone and record
-            # its physical plan so the exchange-free property of the
-            # broadcast regime stays pinned by pytest
-            best.count()
-            debug_plans.append(
-                best._jdf.queryExecution().executedPlan().toString()
-            )
+        best = _scored_best(e.join(nbr, "dst"))
         merged = (
             labels.join(best, "id", "left")
             .select(
@@ -215,3 +221,36 @@ def label_propagation(
             break
     e.unpersist()
     return LabelPropResult(labels, it)
+
+
+def label_propagation(
+    edges: DataFrame,
+    max_iter: int = 10,
+    broadcast_vertices: int = 5_000_000,
+    debug_plans: list | None = None,
+    small_graph_edges: int = 4_000_000,
+) -> LabelPropResult:
+    """Three paths, one answer (identical frames and iteration counts,
+    pinned by tests/test_components_fastpath.py):
+
+    1. serial finish — ≤ ``small_graph_edges`` directed edges: the
+       whole fixpoint in the driver over one collected edge pass,
+       under the same edge bound as louvain.py;
+    2. driver-coordinated broadcast rounds — V ≤ ``broadcast_vertices``
+       (the gate mirrors Louvain's): labels on the driver, one
+       exchange-free edge job per round;
+    3. DataFrame rounds — V > ``broadcast_vertices``: nothing
+       vertex-sized reaches the driver.
+
+    ``debug_plans`` (test hook) records each broadcast round's executed
+    plan, so the exchange-free property stays pinned by pytest; it does
+    not choose the path (``small_graph_edges=0`` skips the serial
+    finish)."""
+    if small_graph_edges > 0:
+        local = _labelprop_local(edges, small_graph_edges, max_iter)
+        if local is not None:
+            return local
+    ids = probe_vertex_ids(edges, broadcast_vertices)
+    if ids is not None:
+        return _labelprop_broadcast(edges, ids, max_iter, debug_plans)
+    return _labelprop_rounds(edges, max_iter)

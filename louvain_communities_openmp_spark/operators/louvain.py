@@ -30,8 +30,10 @@ DataFrame super-steps + a CSR-blocked vectorized kernel. Two modes:
   reference's atomics). Aggregation phase is a pure DataFrame
   contraction: edges ⋈ membership(src) ⋈ membership(dst) →
   groupBy(csrc,cdst).sum(w)   (louvain.hxx:865-912), dense renumber in
-  ascending-community order (louvain.hxx:923-928), dendrogram flatten
-  via one hash join per pass (louvain.hxx:825-829).
+  ascending-community order (louvain.hxx:923-928; numpy on the driver
+  when the pass's membership is already there, ``dense_ids``
+  otherwise), dendrogram flatten via one hash join per pass
+  (louvain.hxx:825-829).
 
 - ``auto``: dist passes while the graph is large, then finishes with
   the exact kernel once the coarsened graph fits comfortably in one
@@ -54,6 +56,7 @@ from pyspark.sql import functions as F
 
 from ..oracle.louvain_seq import louvain_seq_fast
 from ..plans.run import RunDir
+from .bcast_rounds import vertex_frame
 from .properties import modularity as modularity_op
 from .properties import total_weight_m, vertex_weights
 
@@ -869,7 +872,9 @@ def _driver_rounds(
     vertex-sized ever materializes on the driver.
 
     Returns (membership DataFrame, iterations, Σ gains, #communities,
-    per-round wall times — the localMove phase split, main.cxx:70-76).
+    per-round wall times — the localMove phase split, main.cxx:70-76,
+    vertex scans, driver-side Q or None, and the membership's driver
+    arrays (ids, com) for the pass-boundary renumber).
     """
     import numpy as np
 
@@ -1055,7 +1060,7 @@ def _driver_rounds(
     )
     return (
         mem, iters, el_pass, int(len(np.unique(com))), round_times,
-        processed, q_cand,
+        processed, q_cand, (ids, com),
     )
 
 
@@ -1180,13 +1185,24 @@ def _local_move_round(
 def _renumber(membership: DataFrame) -> DataFrame:
     """Dense renumber, ascending old community id — the same order as
     the reference's exclusive scan over the existence bitmap
-    (louvain.hxx:923-928)."""
+    (louvain.hxx:923-928). Cogroup path only; the broadcast path
+    renumbers its driver arrays (``_renumber_driver``)."""
     from ..sources.edges import dense_ids
 
     mapping = dense_ids(membership.select("com"), "com", "new_com")
     return membership.join(mapping, "com").select(
         "id", F.col("new_com").alias("com")
     )
+
+
+def _renumber_driver(spark, ids, com) -> DataFrame:
+    """``_renumber`` for a membership the driver already holds as
+    arrays (the broadcast path's pass boundary): np.unique's inverse
+    is the same ascending dense id ``_renumber`` assigns, with no
+    Spark job."""
+    import numpy as np
+
+    return vertex_frame(spark, ids, "com", np.unique(com, return_inverse=True)[1])
 
 
 def _contract(edges: DataFrame, membership: DataFrame) -> DataFrame:
@@ -1475,6 +1491,7 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
         )
         cn: int | None = None
         q_cand: float | None = None  # driver-computed Q (broadcast path)
+        driver_mem = None  # (ids, com) arrays (broadcast path)
         # partition + sort the edge table by kernel block ONCE per
         # pass (the analog of the reference's per-pass CSR rebuild,
         # louvain.hxx:1174-1176): no iteration ever shuffles or
@@ -1508,6 +1525,7 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
                 _sh0 = _s1
             (
                 mem, iters, el_pass, cn, round_times, processed, q_cand,
+                driver_mem,
             ) = _driver_rounds(
                 spark, edges_b, vtot_pdf, init_mem, opts,
                 m_total, E, gate, p, _dbg, blocks_pass=blocks_pass,
@@ -1741,7 +1759,11 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
                 q_fast = q_cand
             break
         t1 = time.time()
-        mem_r = _renumber(mem).persist()
+        mem_r = (
+            _renumber_driver(spark, *driver_mem)
+            if driver_mem is not None
+            else _renumber(mem)
+        ).persist()
         # eager localCheckpoints: truncate cross-pass lineage (the
         # DataFrame analog of the reference's per-pass CSR rebuild,
         # louvain.hxx:1174-1176)

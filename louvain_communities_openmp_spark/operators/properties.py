@@ -75,7 +75,8 @@ def _modularity_local(
     collected once. Exact inner-join semantics (rows whose src OR dst
     lacks a membership row are dropped, communities grouped by csrc);
     summation-order drift ~1e-15 like the fused aggregate below.
-    Returns None above the bound."""
+    Returns None when the edges or the membership exceed the bound
+    (the membership is LIMIT-probed too, so no collect is unbounded)."""
     import numpy as np
 
     tbl = edges.select("src", "dst", "w").limit(bound + 1).toArrow()
@@ -83,9 +84,11 @@ def _modularity_local(
         return None
     if tbl.num_rows == 0:
         return 0.0
-    mem = membership.select("id", "com").toPandas()
-    mid = mem["id"].to_numpy(dtype=np.int64)
-    mcom = mem["com"].to_numpy(dtype=np.int64)
+    mem = membership.select("id", "com").limit(bound + 1).toArrow()
+    if mem.num_rows > bound:
+        return None
+    mid = mem.column("id").to_numpy().astype(np.int64, copy=False)
+    mcom = mem.column("com").to_numpy().astype(np.int64, copy=False)
     order = np.argsort(mid, kind="stable")
     mid, mcom = mid[order], mcom[order]
     src = tbl.column("src").to_numpy().astype(np.int64, copy=False)
@@ -239,13 +242,6 @@ def community_conductance(
             6,
         ).alias("conductance"),
     )
-
-
-def delta_modularity_col(kuc, kud, vtot_u, ctot_c, ctot_d, m: float, resolution: float = 1.0):
-    """ΔQ column expression. → properties.hxx:253-256 (deltaModularity)."""
-    return (kuc - kud) / F.lit(m) - F.lit(resolution) * vtot_u * (
-        vtot_u + ctot_c - ctot_d
-    ) / F.lit(2.0 * m * m)
 
 
 def partition_similarity(a: DataFrame, b: DataFrame) -> DataFrame:

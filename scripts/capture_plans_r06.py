@@ -85,10 +85,10 @@ def main() -> None:
 
     # ---- labelprop
     dbg: list = []
-    label_propagation(edges, max_iter=1, debug_plans=dbg)
+    label_propagation(edges, max_iter=1, small_graph_edges=0, debug_plans=dbg)
     write("labelprop4_before.txt",
-          "# Distributed round body (pre-r6 default path; still the\n"
-          "# >4M-edge path), executed plan of one round's `best` frame:\n\n"
+          "# Distributed broadcast round (the >4M-edge path while\n"
+          "# V <= broadcast_vertices), executed plan of one round:\n\n"
           + (dbg[0] if dbg else "(debug plan unavailable)\n"))
     probe = edges.select("src", "dst", "w").limit(4_000_001)
     write("labelprop4_after.txt",

@@ -405,18 +405,9 @@ def test_eccentricities_path(spark):
     assert rows[1]["ecc"] == 3 and rows[1]["n_reached"] == 5
 
 
-def test_labelprop_broadcast_round_is_exchange_free(spark):
-    """The designed scale property of the broadcast regime, pinned as a
-    plan assertion: a label-propagation round's own operators (above
-    the cached static edge table) contain broadcast exchanges only —
-    no shuffle Exchange. Regressing the partitioning/broadcast layout
-    re-introduces an edge-sized per-round shuffle and fails here."""
-    from louvain_communities_openmp_spark.operators.labelprop import (
-        label_propagation,
-    )
-
+def _round_plan_edges(spark):
     und = [(i, (i * 3) % 40) for i in range(40)] + [(i, i + 1) for i in range(39)]
-    e = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             (s, d, 1.0)
             for a, b in und
@@ -425,8 +416,9 @@ def test_labelprop_broadcast_round_is_exchange_free(spark):
         ],
         "src long, dst long, w double",
     )
-    plans = []
-    label_propagation(e, max_iter=2, debug_plans=plans)
+
+
+def _assert_exchange_free_above_cache(plans):
     assert plans
     for plan in plans:
         lines = plan.splitlines()
@@ -443,6 +435,38 @@ def test_labelprop_broadcast_round_is_exchange_free(spark):
             if "Exchange" in ln and "BroadcastExchange" not in ln
         ]
         assert not bad, bad
+
+
+def test_labelprop_broadcast_round_is_exchange_free(spark):
+    """The designed scale property of the broadcast regime, pinned as a
+    plan assertion: a label-propagation round's own operators (above
+    the cached static edge table) contain broadcast exchanges only —
+    no shuffle Exchange. Regressing the partitioning/broadcast layout
+    re-introduces an edge-sized per-round shuffle and fails here."""
+    from louvain_communities_openmp_spark.operators.labelprop import (
+        label_propagation,
+    )
+
+    plans = []
+    label_propagation(
+        _round_plan_edges(spark), max_iter=2, small_graph_edges=0, debug_plans=plans
+    )
+    _assert_exchange_free_above_cache(plans)
+
+
+def test_components_broadcast_round_is_exchange_free(spark):
+    """Same pin for a components round: the frontier broadcast into
+    the dst-partitioned edge table, min(comp) per dst within each
+    partition — no shuffle Exchange above the cached edge scan."""
+    from louvain_communities_openmp_spark.operators.components import (
+        connected_components,
+    )
+
+    plans = []
+    connected_components(
+        _round_plan_edges(spark), small_graph_edges=0, debug_plans=plans
+    )
+    _assert_exchange_free_above_cache(plans)
 
 
 def test_hits_allclose_directed_karate(spark):

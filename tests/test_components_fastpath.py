@@ -1,11 +1,13 @@
-"""Serial-finish parity: components & label propagation fast paths.
+"""Three-path parity: components & label propagation.
 
-The r6 optimization adds a driver-side numpy finish (under the same
-``small_graph_edges`` bound louvain already uses) to
-``connected_components`` and ``label_propagation``. These tests pin
-that the fast path and the distributed rounds produce IDENTICAL result
-frames and iteration counts, and that the gate falls through to the
-distributed path when the bound is exceeded.
+``connected_components`` and ``label_propagation`` each run one round
+on three paths: the serial finish in driver numpy (default, under
+``small_graph_edges``), the driver-coordinated broadcast rounds
+(``small_graph_edges=0``, V ≤ ``broadcast_vertices``) and the
+DataFrame rounds (``small_graph_edges=0, broadcast_vertices=0``).
+These tests pin that all three produce IDENTICAL result frames and
+iteration counts, and that the gate falls through when the bound is
+exceeded.
 """
 
 from __future__ import annotations
@@ -39,26 +41,66 @@ def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
+# serial finish (bound >> fixtures), driver-coordinated broadcast
+# rounds, DataFrame rounds
+PATHS = (
+    {},
+    {"small_graph_edges": 0},
+    {"small_graph_edges": 0, "broadcast_vertices": 0},
+)
+
+
+def _assert_components_paths(e, **kw):
+    runs = [connected_components(e, **kw, **p) for p in PATHS]
+    want = _rows(runs[0].components, ["id", "comp"])
+    for p, r in zip(PATHS[1:], runs[1:]):
+        assert _rows(r.components, ["id", "comp"]) == want, p
+        assert r.iterations == runs[0].iterations, p
+    return want
+
+
+def _assert_labelprop_paths(e, max_iter):
+    runs = [label_propagation(e, max_iter=max_iter, **p) for p in PATHS]
+    want = _rows(runs[0].labels, ["id", "label"])
+    for p, r in zip(PATHS[1:], runs[1:]):
+        assert _rows(r.labels, ["id", "label"]) == want, (max_iter, p)
+        assert r.iterations == runs[0].iterations, (max_iter, p)
+
+
 def test_components_fastpath_matches_distributed(spark):
     e = _fixture_edges(spark).persist()
-    fast = connected_components(e)  # bound >> fixture → numpy path
-    dist = connected_components(e, small_graph_edges=0)  # force rounds
-    assert _rows(fast.components, ["id", "comp"]) == _rows(
-        dist.components, ["id", "comp"]
+    _assert_components_paths(e)
+    e.unpersist()
+
+
+def test_components_warm_start_paths(spark):
+    """``initial_components`` skips the serial finish; the broadcast
+    and DataFrame rounds must still agree, and reach the cold
+    answer."""
+    e = _fixture_edges(spark).persist()
+    cold = _rows(connected_components(e).components, ["id", "comp"])
+    # previous version: the fixture minus the edges that join 0-2 to
+    # 3-5 (insert-only delta) — labels are a refinement upper bound.
+    # Vertex 5 is missing (seeds as a singleton); 99 is not in the
+    # graph (must be ignored).
+    prev = e.where(
+        ~(
+            (F.least("src", "dst") <= 2)
+            & (F.greatest("src", "dst").between(3, 5))
+        )
     )
-    assert fast.iterations == dist.iterations
+    init = (
+        connected_components(prev).components.where("id != 5")
+        .unionByName(spark.createDataFrame([(99, 0)], "id long, comp long"))
+    )
+    assert _assert_components_paths(e, initial_components=init) == cold
     e.unpersist()
 
 
 def test_labelprop_fastpath_matches_distributed(spark):
     e = _fixture_edges(spark).persist()
     for iters in (1, 2, 4, 10):
-        fast = label_propagation(e, max_iter=iters)
-        dist = label_propagation(e, max_iter=iters, small_graph_edges=0)
-        assert _rows(fast.labels, ["id", "label"]) == _rows(
-            dist.labels, ["id", "label"]
-        ), f"max_iter={iters}"
-        assert fast.iterations == dist.iterations, f"max_iter={iters}"
+        _assert_labelprop_paths(e, iters)
     e.unpersist()
 
 
@@ -101,16 +143,6 @@ def test_components_fastpath_powerlaw_parity(spark):
     )
 
     e = synthetic_powerlaw_edges(spark, 500, 4000).persist()
-    fast = connected_components(e)
-    dist = connected_components(e, small_graph_edges=0)
-    assert _rows(fast.components, ["id", "comp"]) == _rows(
-        dist.components, ["id", "comp"]
-    )
-    assert fast.iterations == dist.iterations
-    lp_f = label_propagation(e, max_iter=4)
-    lp_d = label_propagation(e, max_iter=4, small_graph_edges=0)
-    assert _rows(lp_f.labels, ["id", "label"]) == _rows(
-        lp_d.labels, ["id", "label"]
-    )
-    assert lp_f.iterations == lp_d.iterations
+    _assert_components_paths(e)
+    _assert_labelprop_paths(e, 4)
     e.unpersist()

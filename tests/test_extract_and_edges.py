@@ -46,6 +46,38 @@ def test_dense_ids_are_dense_and_sorted(spark):
     assert [r["url"] for r in ids] == sorted(f"u{i:03d}" for i in range(97))
 
 
+def test_dense_ids_fast_path_matches_scalable(spark):
+    """collect_bound=0 forces the scalable plan; the driver-sorted fast
+    path must assign identical ids on a string column (Python's
+    code-point order == Spark's UTF8 binary order) with the same
+    schema. Integer columns always take the scalable plan: their ids
+    must be dense and follow ascending integral order."""
+    strs = spark.createDataFrame(
+        [(f"u{(i * 37) % 101}",) for i in range(300)] + [("Z",), ("é",), ("a",)],
+        "url string",
+    )
+    fast = dense_ids(strs, "url", "new_id")
+    slow = dense_ids(strs, "url", "new_id", collect_bound=0)
+    # the fast path is a local relation, not the windowed rank
+    assert "Window" not in fast._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in slow._jdf.queryExecution().executedPlan().toString()
+    assert [(f.name, f.dataType) for f in fast.schema] == [
+        (f.name, f.dataType) for f in slow.schema
+    ]
+    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
+
+    longs = spark.createDataFrame(
+        [((i * 7919) % 211 - 100,) for i in range(300)] + [(2**40,), (-(2**40),)],
+        "com long",
+    )
+    ints = spark.createDataFrame([((i * 13) % 29 - 7,) for i in range(60)], "c int")
+    for df, col in ((longs, "com"), (ints, "c")):
+        want = sorted({r[0] for r in df.collect()})
+        rows = dense_ids(df, col, "new_id").orderBy("new_id").collect()
+        assert [r["new_id"] for r in rows] == list(range(len(want)))
+        assert [r[col] for r in rows] == want
+
+
 def test_pages_roundtrip_recovers_graph(spark):
     """pages built from karate edges → extraction → same edge set."""
     planted = edges_from_list(spark, karate())

@@ -123,6 +123,33 @@ def test_modularity_singletons_karate(spark):
     )
 
 
+def test_modularity_membership_over_bound_falls_through(spark):
+    """The serial finish LIMIT-probes the membership as well as the
+    edges: a membership larger than the bound (here: karate's plus
+    rows for vertices without edges) takes the distributed aggregate,
+    with the same Q."""
+    from louvain_communities_openmp_spark.operators.properties import (
+        _modularity_local,
+    )
+
+    kar = karate()
+    e = edges_from_list(spark, kar).persist()
+    n_edges = e.count()
+    res = louvain_seq(adjacency(kar))
+    rows = [(i, int(c)) for i, c in enumerate(res.membership)]
+    extra = [(1000 + i, i) for i in range(n_edges)]
+    mem = spark.createDataFrame(rows + extra, "id long, com long")
+    bound = n_edges + 10  # edges fit, membership does not
+    assert _modularity_local(e, mem, 1.0, None, bound) is None
+    q = modularity(e, mem, small_graph_edges=bound)
+    assert math.isclose(q, res.modularity, abs_tol=1e-9)
+    assert math.isclose(q, modularity(e, mem, small_graph_edges=0), abs_tol=1e-12)
+    # both fit: the serial finish answers
+    q_local = _modularity_local(e, mem, 1.0, None, 10 * bound)
+    assert q_local is not None and math.isclose(q_local, q, abs_tol=1e-12)
+    e.unpersist()
+
+
 def test_deterministic_walks(spark):
     from louvain_communities_openmp_spark.operators.walks import (
         deterministic_walks,

@@ -134,6 +134,37 @@ def test_dist_fallback_matches_broadcast(spark):
         assert abs(a.modularity - b.modularity) < 1e-12
 
 
+def test_dist_pass_boundary_renumber_matches_dense_ids(spark, monkeypatch):
+    """The broadcast path renumbers each pass's membership from its
+    driver arrays (np.unique). Routing the same pass boundary through
+    ``_renumber`` (dense_ids), or running the cogroup path, must give
+    the same membership, Q and pass count on a multi-pass solve."""
+    import pandas as pd
+
+    import louvain_communities_openmp_spark.operators.louvain as L
+
+    e = edges_from_list(spark, ring_of_cliques(16, 8))
+    a = louvain(e, LouvainOptions(mode="dist", num_blocks=4))
+    assert a.passes >= 2
+    monkeypatch.setattr(
+        L,
+        "_renumber_driver",
+        lambda sp, ids, com: L._renumber(
+            sp.createDataFrame(
+                pd.DataFrame({"id": ids, "com": com}), L.MEMBERSHIP_SCHEMA
+            )
+        ),
+    )
+    b = louvain(e, LouvainOptions(mode="dist", num_blocks=4))
+    monkeypatch.undo()
+    c = louvain(e, LouvainOptions(mode="dist", num_blocks=4, broadcast_vertices=0))
+    ma = sorted((r["id"], r["com"]) for r in a.membership.collect())
+    for r in (b, c):
+        assert sorted((x["id"], x["com"]) for x in r.membership.collect()) == ma
+        assert abs(r.modularity - a.modularity) < 1e-12
+        assert r.passes == a.passes
+
+
 def test_warm_start_oracle_converged_input(spark):
     """Seeding louvain_seq_fast with its own converged membership makes
     the next run converge immediately (louvainInitializeFromW)."""
